@@ -16,6 +16,7 @@ cannot recompute the lost blocks.
 - ``"reliable"``: ``DataFrame.checkpoint`` to the SparkContext checkpoint
   dir (set ``spark.sparkContext.setCheckpointDir`` to a DFS path first) —
   survives executor loss; the right setting under dynamic allocation.
+  Always eager, whatever ``eager=`` says.
 - ``"persist"``: MEMORY_AND_DISK persist — recomputable from lineage on
   block loss (safe with dynamic allocation), but pinned until unpersist
   and lineage is NOT truncated (avoid inside iterative loops).
@@ -83,7 +84,10 @@ def materialize(
     if s == "local":
         return df.localCheckpoint(eager=eager)
     if s == "reliable":
-        return df.checkpoint(eager=eager)
+        # always eager: a lazy reliable checkpoint computes its input twice,
+        # once for the action that triggers it and once more to write the
+        # checkpoint files (the RDD it marks is not cached)
+        return df.checkpoint(eager=True)
     from pyspark.storagelevel import StorageLevel
 
     p = df.persist(StorageLevel.MEMORY_AND_DISK)

@@ -13,7 +13,18 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def local_cpus() -> int:
+    """Cores of the local session: ``SPARK_GRAFT_CPUS`` when set, else the
+    cores this process may run on (so a plain run never oversubscribes
+    the host)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    return len(os.sched_getaffinity(0))
+
+
+DEFAULT_SHUFFLE_PARTITIONS = local_cpus()
 
 
 def get_spark(
@@ -30,10 +41,9 @@ def get_spark(
     is small and splits skewed partitions when it is not, so one setting
     serves sf0.001 tests and the 1000-executor target.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master or f"local[{local_cpus()}]")
         # local mode runs everything in one JVM; the 1g default heap GC-
         # thrashes under 32 concurrent tasks (effective only when this
         # call launches the JVM, i.e. the first session of the process)

@@ -1,8 +1,13 @@
-"""Arbitrary per-key state: the ``table[k] = f(table[k], v)`` escape hatch.
+"""Per-key streaming state: faust's counter tables and the
+``table[k] = f(table[k], v)`` escape hatch.
 
-The reference's Table allows any Python reduction per key (SURVEY §2.4);
-built-in streaming aggs cover sums/counts/sets, and this module covers the
-rest via ``applyInPandasWithState`` — Spark's keyed-state operator with
+Counter tables (``app.Table(default=int)`` with ``table[k] += v``) are
+Spark's native streaming aggregation in update mode: ``groupBy(key).agg``
+plans as partial aggregate → exchange → state-store restore/save → final
+aggregate, with no Python worker in the loop. Only what a built-in
+aggregate cannot express — an arbitrary Python reducer
+(:func:`reduce_by_key`) and event-time timers (:func:`session_tracker`) —
+runs through ``applyInPandasWithState``, Spark's keyed-state operator with
 checkpointed state (the analogue of faust's RocksDB store + changelog,
 minus all the recovery machinery).
 
@@ -14,11 +19,12 @@ faust table reads see "current value as of now".
 
 from __future__ import annotations
 
-from typing import Any, Callable, Iterable, Iterator, Tuple
+from typing import Any, Callable, Iterable, Tuple
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
@@ -45,48 +51,17 @@ def stateful_counter(
 
     Sums accumulate as integer hundredths (the fixtures carry 2-decimal
     currency values): exact, order-independent, and equal to a decimal-sum
-    oracle — float accumulation would drift in the last ulp.
+    oracle — float accumulation would drift in the last ulp. ``bround``
+    rounds HALF_EVEN, as numpy's ``round`` does. Null values of
+    ``sum_col`` are skipped; every row counts.
     """
-    fields = [
-        StructField(key_name, key_type, False),
-        StructField(count_alias, LongType(), False),
-    ]
-    state_fields = [StructField("c", LongType(), False)]
+    aggs = [F.count(F.lit(1)).alias(count_alias)]
     if sum_col is not None:
-        fields.append(StructField(sum_alias, DoubleType(), True))
-        state_fields.append(StructField("s", LongType(), False))  # hundredths
-    out_schema = StructType(fields)
-    state_schema = StructType(state_fields)
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        c = 0
-        cents = 0
-        if state.exists:
-            prev = state.get
-            c = prev[0]
-            if sum_col is not None:
-                cents = prev[1]
-        for pdf in pdfs:
-            c += len(pdf)
-            if sum_col is not None:
-                cents += int((pdf[sum_col] * 100).round().astype("int64").sum())
-        state.update((c, cents) if sum_col is not None else (c,))
-        row = {key_name: key[0], count_alias: c}
-        if sum_col is not None:
-            row[sum_alias] = cents / 100.0
-        yield pd.DataFrame([row])
-
-    return grouped.applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+        cents = F.bround(F.col(sum_col) * 100).cast("long")
+        aggs.append((F.sum(cents) / F.lit(100.0)).alias(sum_alias))
+    names = [count_alias] + ([sum_alias] if sum_col is not None else [])
+    out = grouped.agg(*aggs).toDF(key_name, *names)
+    return out.select(F.col(key_name).cast(key_type).alias(key_name), *names)
 
 
 def stateful_counts(
@@ -106,30 +81,11 @@ def stateful_counts(
     value, batching-invariant like :func:`stateful_counter`).
     """
     keys = list(keys)
-    fields = [StructField(n, t, False) for n, t in keys]
-    fields.append(StructField(count_alias, LongType(), False))
-    out_schema = StructType(fields)
-    state_schema = StructType([StructField("c", LongType(), False)])
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        c = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            c += len(pdf)
-        state.update((c,))
-        row = {n: v for (n, _t), v in zip(keys, key)}
-        row[count_alias] = c
-        yield pd.DataFrame([row])
-
-    return grouped.applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    out = grouped.agg(F.count(F.lit(1)).alias(count_alias)).toDF(
+        *[n for n, _t in keys], count_alias
+    )
+    return out.select(
+        *[F.col(n).cast(t).alias(n) for n, t in keys], count_alias
     )
 
 

@@ -243,3 +243,38 @@ def test_materialize_strategy_knob(spark):
             materialize(df)
     finally:
         spark.conf.set("spark.faust_spark.materialize", "local")
+
+
+def test_lazy_reliable_materialize_computes_input_once(spark, tmp_path):
+    """Under the ``reliable`` strategy a lazy materialize must not compute
+    its input twice (once for the first action, once more to write the
+    checkpoint): a counting UDF sees each of 1000 rows exactly once
+    across two actions."""
+    from pyspark.sql.types import LongType
+
+    from faust_spark.operators.mat import materialize
+
+    sc = spark.sparkContext
+    calls = sc.accumulator(0)
+
+    def counted(x):
+        calls.add(1)
+        return x
+
+    udf = F.udf(counted, LongType())
+    df = spark.range(1000).select(udf("id").alias("id"))
+    jsc = sc._jsc.sc()
+    prev_dir = jsc.checkpointDir()
+    spark.conf.set("spark.faust_spark.materialize", "reliable")
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        m = materialize(df, eager=False)
+        assert m.count() == 1000
+        assert m.agg(F.sum("id")).collect()[0][0] == 999 * 1000 // 2
+    finally:
+        spark.conf.set("spark.faust_spark.materialize", "local")
+        # restore the session's checkpoint dir (None unless a test set
+        # one): a stray dir would turn later iterative ``persist`` calls
+        # into reliable checkpoints
+        getattr(jsc, "checkpointDir_$eq")(prev_dir)
+    assert calls.value == 1000

@@ -102,6 +102,93 @@ def test_stateful_counts_composite_key_matches_batch(
     assert final == expected
 
 
+@pytest.fixture(scope="module")
+def half_cent_events(tmp_path_factory):
+    """Three parquet files (three micro-batches at one file a trigger) of
+    (user_id, value). Values include exact binary half-cents (0.125,
+    0.625), where HALF_EVEN and HALF_UP cent rounding disagree, and a
+    null value, which counts but adds nothing."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("half_cents")
+    files = [
+        [(1, 0.125), (2, 10.5), (1, 3.25), (3, None)],
+        [(2, 0.625), (1, 1.01), (3, 7.0), (2, 0.1)],
+        [(1, 0.125), (3, 2.675), (4, 99.99), (2, 0.2)],
+    ]
+    for i, rows in enumerate(files):
+        uid, val = zip(*rows)
+        pq.write_table(
+            pa.table(
+                {
+                    "user_id": pa.array(uid, pa.int64()),
+                    "value": pa.array(val, pa.float64()),
+                }
+            ),
+            str(d / f"part-{i}.parquet"),
+        )
+    return str(d), [r for rows in files for r in rows]
+
+
+def test_stateful_counter_sum_matches_half_even_decimal_sum(
+    spark, half_cent_events
+):
+    """Across 3 micro-batches the final per-key total equals the decimal
+    sum of the values rounded to cents HALF_EVEN (numpy's ``round``):
+    0.125 counts as 0.12, not 0.13."""
+    from decimal import ROUND_HALF_EVEN, Decimal
+
+    path, rows = half_cent_events
+    s = stream_parquet(spark, path, max_files_per_trigger=1)
+    out = run_to_memory(
+        stateful_counter(s.groupBy("user_id"), "user_id", sum_col="value"),
+        output_mode="update",
+    )
+    got = {
+        r.user_id: (r.cnt, r.total)
+        for r in out.groupBy("user_id")
+        .agg(F.max("cnt").alias("cnt"), F.max("total").alias("total"))
+        .collect()
+    }
+    cnt: dict[int, int] = {}
+    cents: dict[int, Decimal] = {}
+    for uid, v in rows:
+        cnt[uid] = cnt.get(uid, 0) + 1
+        q = Decimal(0) if v is None else Decimal(repr(v)).quantize(
+            Decimal("0.01"), rounding=ROUND_HALF_EVEN
+        )
+        cents[uid] = cents.get(uid, Decimal(0)) + q
+    assert got == {u: (cnt[u], float(cents[u])) for u in cnt}
+    assert got[1][1] == 4.5  # 0.12 + 3.25 + 1.01 + 0.12
+
+
+def test_stateful_counter_runs_as_native_aggregation(spark, half_cent_events):
+    """The counter compiles to Spark's streaming aggregation: its state
+    operators are the state-store save, never a Python worker."""
+    path, _rows = half_cent_events
+    s = stream_parquet(spark, path, max_files_per_trigger=1)
+    q = (
+        stateful_counter(s.groupBy("user_id"), "user_id", sum_col="value")
+        .writeStream.format("memory")
+        .queryName("native_counter_ops")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(300)
+        names = [
+            op["operatorName"]
+            for p in q.recentProgress
+            for op in p.get("stateOperators", [])
+        ]
+    finally:
+        q.stop()
+    assert names
+    assert "applyInPandasWithState" not in names, names
+
+
 def test_append_mode_emits_only_closed_windows(spark, multi_file_events):
     s = stream_parquet(spark, multi_file_events)
     agg = (

@@ -18,8 +18,10 @@ import math
 import sys
 import time
 import traceback
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script sits in, so an oracle run checks its own code
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def norm_cell(v) -> str:
