@@ -17,6 +17,7 @@ from typing import Any, Callable, Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from faust_spark.models import Record
+from faust_spark.streaming.runner import stream_parquet
 from faust_spark.streams import Stream
 from faust_spark.tables import SetTable, Table
 
@@ -129,11 +130,7 @@ class Topic:
     def stream_df(self, starting_offsets: str = "earliest") -> DataFrame:
         spark = self.app.spark
         if self.path:
-            reader = spark.readStream
-            schema = spark.read.parquet(self.path).schema
-            return (
-                reader.schema(schema).format("parquet").load(self.path)
-            )
+            return stream_parquet(spark, self.path)
         reader = spark.readStream.format("kafka")
         for k, v in self.kafka_source_options(starting_offsets).items():
             reader = reader.option(k, v)

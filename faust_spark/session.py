@@ -4,7 +4,8 @@ Every knob here is chosen for the 100 TB target (see README): AQE for runtime
 re-planning and skew-join splitting, partition-size targets that keep shuffle
 blocks in executor memory, Arrow for any pandas-UDF boundary, and UTC session
 time so event-time window math is deterministic across engines (the DuckDB
-correctness oracle runs in UTC).
+correctness oracle runs in UTC). Under a local master, file listing stays on
+the driver; any other master keeps Spark's distributed listing job.
 """
 
 from __future__ import annotations
@@ -41,9 +42,10 @@ def get_spark(
     is small and splits skewed partitions when it is not, so one setting
     serves sf0.001 tests and the 1000-executor target.
     """
+    master = master or f"local[{local_cpus()}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{local_cpus()}]")
+        .master(master)
         # local mode runs everything in one JVM; the 1g default heap GC-
         # thrashes under 32 concurrent tasks (effective only when this
         # call launches the JVM, i.e. the first session of the process)
@@ -74,6 +76,15 @@ def get_spark(
         # parquet writer defaults for any sink we materialize
         .config("spark.sql.parquet.compression.codec", "snappy")
     )
+    if master == "local" or master.startswith("local["):
+        # above 32 paths Spark lists files with a job of one task per path
+        # (every file-stream micro-batch re-lists the files it found); in
+        # local mode those tasks share the driver's JVM and cores, so the
+        # job adds scheduling cost and no parallelism
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            "2147483647",
+        )
     if rocksdb_state:
         # large streaming state (the reference's RocksDB table store,
         # faust/stores/rocksdb.py role): spill keyed state to disk instead

@@ -141,3 +141,18 @@ def test_zero_spin_phase_is_flagged_not_missing(tmp_path):
     out = _run_compare(tmp_path, old, new)
     assert out["phase_drift_new"] is not None
     assert out["unreliable"] is True
+
+
+def test_round_wrapper_is_unwrapped(tmp_path):
+    """A per-round BENCH_r*.json carries bench.py's output under
+    ``parsed``; the comparison reads through the wrapper, on either
+    side."""
+    q = {"q1_pricing": 1.0, "word_count": 2.0}
+    old = {"n": 1, "rc": 0, "tail": "",
+           "parsed": _bench_json(1.0, q, pre=1.0, post=1.0)}
+    new = _bench_json(2.0, {k: v * 2 for k, v in q.items()},
+                      pre=2.0, post=2.0)
+    out = _run_compare(tmp_path, old, new)
+    assert out["spin_old_s"] == 1.0 and out["spin_new_s"] == 2.0
+    assert out["common_queries"] == 2
+    assert out["total_norm_ratio"] == 1.0

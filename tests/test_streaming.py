@@ -189,6 +189,37 @@ def test_stateful_counter_runs_as_native_aggregation(spark, half_cent_events):
     assert "applyInPandasWithState" not in names, names
 
 
+def test_local_file_stream_batch_lists_files_without_a_job(spark, tmp_path):
+    """Under a local master each micro-batch lists its files on the
+    driver: a 40-file trigger runs no listing job of one task per file,
+    so the whole drain of 80 files runs fewer than 80 tasks."""
+    d = str(tmp_path / "many_files")
+    spark.range(0, 80, 1, 80).write.parquet(d)
+    q = (
+        stream_parquet(spark, d, 40)
+        .groupBy()
+        .count()
+        .writeStream.format("memory")
+        .queryName("listing_tasks")
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(300)
+        tracker = spark.sparkContext.statusTracker()
+        tasks = 0
+        for job in tracker.getJobIdsForGroup(str(q.runId)):
+            for stage in tracker.getJobInfo(job).stageIds:
+                info = tracker.getStageInfo(stage)
+                tasks += info.numTasks if info else 0
+        rows = spark.table("listing_tasks").collect()
+    finally:
+        q.stop()
+    assert rows[0]["count"] == 80
+    assert 0 < tasks < 80, tasks
+
+
 def test_append_mode_emits_only_closed_windows(spark, multi_file_events):
     s = stream_parquet(spark, multi_file_events)
     agg = (

@@ -267,6 +267,17 @@ def test_app_task_fires_on_first_stream(spark):
     assert calls == ["hook"]
 
 
+def test_single_file_topic_streams(spark, sf_dir):
+    """A topic backed by one parquet file (not a directory) drains as a
+    stream and yields every row of the file."""
+    from faust_spark.streaming.runner import run_to_memory
+
+    path = f"{sf_dir}/events.parquet"
+    topic = make_app(spark).topic(path=path)
+    out = run_to_memory(topic.stream_df(), output_mode="append")
+    assert out.count() == spark.read.parquet(path).count()
+
+
 def test_task_registered_after_first_stream_still_runs(spark):
     """App.start() is idempotent PER TASK: a @app.task registered after
     an early stream build (which triggers start) must run on the next

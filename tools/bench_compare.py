@@ -9,6 +9,8 @@ cancels uniform host speed differences.
 
 Usage:
     python tools/bench_compare.py OLD.json NEW.json [--top 15]
+Either file may be bench.py's own JSON or a per-round ``BENCH_r*.json``
+that wraps it under ``parsed``.
 Prints one JSON line: per-query normalized ratios (new/old), sorted by
 regression, plus the headline aggregates.
 
@@ -50,6 +52,7 @@ NOISE_FLOOR_SPINS = 1.5
 def load(path: str) -> dict:
     with open(path) as f:
         data = json.load(f)
+    data = data.get("parsed") or data
     spin = (data.get("host_calib") or {}).get("python_spin_sec")
     if not spin:
         raise SystemExit(
